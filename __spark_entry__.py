@@ -30,9 +30,11 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md par.2.
 
-    Dict order front-loads queries still awaiting a correctness record
-    (see registry.ordered_queries) so a capped check window always
-    verifies new evidence first.
+    Dict order (see registry.ordered_queries) puts new evidence first
+    for a capped check window, in three blocks: names without a usable
+    correctness record (oracle-backed first), then active RECHECK pins,
+    then recorded names, oldest record first.  Ties keep registration
+    order.
     """
     return registry.ordered_queries()
 

@@ -23,20 +23,22 @@ live THERE and survive regeneration; this file is disposable output).
 from __future__ import annotations
 
 import os
-import re
 import sys
 import time
+import uuid
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from hq_master_data_warehouse_spark import registry
+from hq_master_data_warehouse_spark import obs, registry
 from hq_master_data_warehouse_spark.session import get_spark
 
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SF1 = os.environ.get("SPARK_GRAFT_SF1_DIR", "/root/repo/.data/sf1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(
+    len(os.sched_getaffinity(0))
+)
 
 #: the heaviest headline queries whose cost scales with INPUT size.
 #: Near-dup/contamination text ops are excluded: the sf1 derivation
@@ -127,22 +129,6 @@ HEAVY = [
     "window_distribution_functions",
 ]
 
-MARKERS = [
-    "BroadcastHashJoin",
-    "SortMergeJoin",
-    "ShuffledHashJoin",
-    "BroadcastNestedLoopJoin",
-    "CartesianProduct",
-]
-
-
-def _shape(plan: str) -> dict:
-    counts = {m: plan.count(m) for m in MARKERS if plan.count(m)}
-    counts["skew"] = len(re.findall(r"isSkew(?:Join)?=true|skew=true", plan))
-    counts["final"] = "isFinalPlan=true" in plan
-    return counts
-
-
 # Queries whose construction EXECUTES jobs eagerly (iterative loops
 # with per-round localCheckpoint): re-timing only a write of the
 # already-checkpointed result would skip the iterations entirely, so
@@ -197,10 +183,7 @@ def run(spark, name: str, sf_dir: str) -> tuple[float, dict]:
     df.write.format("noop").mode("overwrite").save()
     dt = time.perf_counter() - t0
     df.collect()  # untimed: finalizes df's own adaptive plan
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    shape = _shape(plan)
+    shape = obs.plan_summary(obs.explain(spark, df))
     if name in COMPOSITE_PLAN:
         shape["final"] = COMPOSITE_PLAN[name]
     return round(dt, 2), shape
@@ -241,47 +224,29 @@ def delta_roundtrip(spark, sf_dir: str) -> tuple[float, int, int]:
     return round(dt, 2), n_files, n_rows
 
 
-def _completed_stages(spark) -> dict:
-    """Completed-stage metrics from the UI REST API (the session is
-    created with the UI on for exactly this purpose): stage key ->
-    {shuffle write/read bytes, memory/disk spill bytes}."""
-    import json as _json
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app_id}/stages?status=COMPLETE"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        stages = _json.load(r)
-    return {
-        (s["stageId"], s["attemptId"]): s for s in stages
-    }
-
-
 def memory_evidence(spark, name: str, sf_dir: str) -> dict:
     """Run one cold pass of ``name`` and return the shuffle/spill
     totals of exactly the stages that pass executed (VERDICT r9 item
     5: the 100 TB narrative needs a memory story, not just
-    wall-clock).  memoryBytesSpilled/diskBytesSpilled == 0 means the
-    whole plan ran in-memory at this scale."""
-    before = set(_completed_stages(spark))
+    wall-clock).  Spilled memory and disk == 0 means the whole plan
+    ran in-memory at this scale.  Each call runs under a fresh job
+    group, so a repeated name (warm row, then cold row) counts only
+    its own pass."""
+    group = f"mem:{name}:{uuid.uuid4().hex}"
+    spark.sparkContext.setJobGroup(group, "bench_sf1 memory evidence")
     df = registry.QUERIES[name](spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
-    after = _completed_stages(spark)
-    new = [after[k] for k in after if k not in before]
-    tot = lambda f: sum(s.get(f, 0) for s in new)  # noqa: E731
-    peak = lambda f: max((s.get(f, 0) for s in new), default=0)  # noqa: E731
+    rows = obs.stage_rows(spark, group)
+    tot = lambda k: round(sum(r[k] for r in rows), 1)  # noqa: E731
     return {
-        "stages": len(new),
-        "shuffle_write_mb": round(tot("shuffleWriteBytes") / 2**20, 1),
+        "stages": len(rows),
+        "shuffle_write_mb": tot("sw_mb"),
         "peak_stage_shuffle_write_mb": round(
-            peak("shuffleWriteBytes") / 2**20, 1
+            max((r["sw_mb"] for r in rows), default=0), 1
         ),
-        "shuffle_read_mb": round(tot("shuffleReadBytes") / 2**20, 1),
-        "memory_spilled_mb": round(
-            tot("memoryBytesSpilled") / 2**20, 1
-        ),
-        "disk_spilled_mb": round(tot("diskBytesSpilled") / 2**20, 1),
+        "shuffle_read_mb": tot("sr_mb"),
+        "memory_spilled_mb": tot("mem_spill_mb"),
+        "disk_spilled_mb": tot("spill_mb"),
     }
 
 
@@ -324,11 +289,7 @@ def _clear_matcache() -> None:
 
 def main() -> None:
     registry.load_catalog()
-    # UI on: the REST stage API is the spill/shuffle evidence source
-    spark = get_spark(
-        master=f"local[{CPUS}]",
-        extra_conf={"spark.ui.enabled": "true"},
-    )
+    spark = get_spark(master=f"local[{CPUS}]", shuffle_partitions=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
 
     results: dict[str, tuple] = {}
@@ -342,11 +303,9 @@ def main() -> None:
         minutes of measurements -- the writer only runs at the end)."""
         try:
             return run(sess, name, sf_dir)
-        except ValueError as e:
-            if "bounded to" in str(e):
-                return "refused", {"guard": "refused by budget guard"}
-            return "FAIL", {"error": type(e).__name__}
         except Exception as e:  # noqa: BLE001
+            if obs.is_refusal(e):
+                return "refused", {"guard": "refused by budget guard"}
             return "FAIL", {"error": type(e).__name__}
 
     def cell(sess, name):
@@ -447,7 +406,7 @@ def main() -> None:
         f.write(
             "\n## Memory / spill evidence (heavy tail)\n\n"
             "Shuffle and spill totals over exactly the stages one "
-            "cold pass executed (UI REST stage metrics).  Zero "
+            "cold pass executed (status-store stage metrics).  Zero "
             "spill = the plan fits executor memory at this scale; "
             "shuffle volume growing ~linearly with data while spill "
             "stays zero is the headroom story for the next 10x.\n\n"

@@ -53,18 +53,20 @@ def test_doc_counts_match_registry():
 
 def test_check_window_rotates_oldest_record_first():
     """VERDICT r12 item 1: the back block of ordered_queries() (names
-    already holding a prior-round record, not pinned by PRIORITY or an
-    active RECHECK) must sort by record age ASCENDING, ties broken by
+    already holding a prior-round record, not pinned by an active
+    RECHECK) must sort by record age ASCENDING, ties broken by
     registration order.  This makes the driver's ~50-slot gate sweep
     the full registry on a ~7-round cycle instead of re-verifying the
     same 50 names every round while ~320 greens age indefinitely."""
     registry.load_catalog()
     ordered = list(registry.ordered_queries())
+    assert sorted(ordered) == sorted(registry.QUERIES), (
+        "ordered_queries() must be a permutation of QUERIES"
+    )
     checked = registry._recorded_names()
     rounds = dict(registry._RECORD_ROUND)
     if not rounds:
         pytest.skip("no CORRECTNESS_r*.json records readable")
-    front = {n for n in registry.PRIORITY if n not in checked}
     active_recheck = {
         n
         for n in registry.RECHECK
@@ -72,9 +74,7 @@ def test_check_window_rotates_oldest_record_first():
         and rounds.get(n, 0) < registry.RECHECK_SINCE
     }
     back = [
-        n
-        for n in ordered
-        if n in checked and n not in front and n not in active_recheck
+        n for n in ordered if n in checked and n not in active_recheck
     ]
     ages = [rounds.get(n, 0) for n in back]
     assert ages == sorted(ages), (
